@@ -130,25 +130,18 @@ def _bucketed_flags(
 ) -> DataFrame:
     """Hot-key-safe change flags + global run ids.
 
-    Per-key lags come from temporal._bucketed_shift (in-bucket F.lag,
+    Per-key lags come from temporal._carry_chain (in-bucket F.lag,
     carry prefix stitched across the previous NON-EMPTY buckets — so
     empty buckets cannot orphan a run start), with a lagged constant
     as the is-first-row marker.  Global run numbering is the in-bucket
     cumulative flag count re-based by an exclusive running offset over
     the tiny per-(key, bucket) flag-sum table.
     """
-    from .temporal import _bucketed_shift, _bucketize
+    from .temporal import _bucketize, _carry_chain
 
-    shifted = _bucketed_shift(
-        df.withColumn("__one", F.lit(1)),
-        cols=["__one", *vals_l],
-        ks=[1],
-        keys_l=keys_l,
-        order_l=order_l,
-        ts_col=ts_col,
-        bucket_seconds=bw,
-        descending=False,
-        name="lag",
+    shifted = _carry_chain(
+        df.withColumn("__one", F.lit(1)), keys_l, order_l, ts_col, bw,
+        lag_cols=["__one", *vals_l], lags=[1],
     )
 
     def lag_of(c):

@@ -14,11 +14,16 @@ Scale notes:
 - Hot entities (a conversation with millions of turns) break a naive
   ``Window.partitionBy(conv_id)``: EVERY operator here accepts
   ``strategy="bucketed"``, which range-splits time into buckets per key
-  and stitches bucket boundaries with a tiny carry table (sessionize,
-  forward_fill, asof_join), a ≤K-row carry prefix (with_lags,
-  with_rolling rows mode), or next-bucket context duplication
-  (with_rolling time mode) — so no single task ever sees a whole hot
-  key. Output is identical to the window strategy.
+  so no single task ever sees a whole hot key. Bucket boundaries are
+  stitched by one carry mechanism, ``_carry_chain``, shared by
+  sessionize, with_lags (lags), with_rolling (rows mode) and
+  forward_fill, and called once for the whole materialize chain: one
+  in-bucket window pass, one per-(key, bucket) summary (first/last ts,
+  gap count, last K rows, last non-null value), one small window over
+  buckets and one join back (leads run it in reverse event order).
+  asof_join keeps its own carry table and with_rolling time mode
+  next-bucket context duplication. Output is identical to the window
+  strategy.
 """
 
 from __future__ import annotations
@@ -82,10 +87,10 @@ def sessionize(
     strategy="bucketed": the carry-in trick for hot keys (a conversation
     with millions of turns). Time is range-split into ``bucket_seconds``
     buckets; the boundary indicator needs only the LAST event of the
-    previous bucket (a tiny per-(key, bucket) table), the cumulative sum
-    runs per (key, bucket) plus a prefix-sum of per-bucket session
-    counts over the small carry table — no task ever scans a whole hot
-    key. Identical output to the window strategy.
+    previous bucket, the cumulative gap count runs per (key, bucket),
+    and the session offset is a prefix sum of per-bucket session counts
+    over the small carry table (``_carry_chain``) — no task ever scans
+    a whole hot key. Identical output to the window strategy.
     """
     keys_l = [keys] if isinstance(keys, str) else list(keys)
     order_l = [order] if isinstance(order, str) else list(order)
@@ -104,57 +109,9 @@ def sessionize(
 
     if strategy != "bucketed":
         raise ValueError(f"unknown sessionize strategy {strategy!r}")
-
-    b = df.withColumn(
-        "__bucket", F.floor(epoch_seconds(ts_col) / F.lit(int(bucket_seconds)))
-    )
-    # per-(key, bucket): ordered indicator with NULL prev inside bucket
-    wb = Window.partitionBy(*keys_l, "__bucket").orderBy(*order_l)
-    prev_in_bucket = F.lag(F.col(ts_col)).over(wb)
-    # last event per (key, bucket) -> carry table (small: keys x buckets)
-    carry = b.groupBy(*keys_l, "__bucket").agg(
-        F.max(F.struct(*[F.col(c) for c in order_l], F.col(ts_col).alias("__t")))[
-            "__t"
-        ].alias("__last_ts"),
-        F.lit(0).alias("__dummy"),
-    ).drop("__dummy")
-    wc = Window.partitionBy(*keys_l).orderBy("__bucket")
-    carry = carry.select(
-        *keys_l,
-        "__bucket",
-        F.lag("__last_ts").over(wc).alias("__prev_bucket_last_ts"),
-    )
-    b = b.join(carry, [*keys_l, "__bucket"], "left")
-    first_prev = F.coalesce(prev_in_bucket, F.col("__prev_bucket_last_ts"))
-    is_new = (
-        first_prev.isNull()
-        | (epoch_seconds(ts_col) - epoch_seconds(first_prev) > F.lit(gap_seconds))
-    ).cast("long")
-    cum_in_bucket = F.sum(is_new).over(
-        Window.partitionBy(*keys_l, "__bucket")
-        .orderBy(*order_l)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    b = b.withColumn("__new_in_bucket_cum", cum_in_bucket)
-    # per-bucket totals -> exclusive prefix sum over buckets (tiny table)
-    totals = b.groupBy(*keys_l, "__bucket").agg(
-        F.max("__new_in_bucket_cum").alias("__bucket_total")
-    )
-    wt = (
-        Window.partitionBy(*keys_l)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    totals = totals.select(
-        *keys_l,
-        "__bucket",
-        F.coalesce(F.sum("__bucket_total").over(wt), F.lit(0)).alias("__offset"),
-    )
-    out = b.join(totals, [*keys_l, "__bucket"], "left").withColumn(
-        out_col, (F.col("__offset") + F.col("__new_in_bucket_cum") - 1).cast("long")
-    )
-    return out.drop(
-        "__bucket", "__prev_bucket_last_ts", "__new_in_bucket_cum", "__offset"
+    return _carry_chain(
+        df, keys_l, order_l, ts_col, bucket_seconds,
+        gap_seconds=gap_seconds, session_col=out_col,
     )
 
 
@@ -164,97 +121,183 @@ def _bucketize(df: DataFrame, ts_col: str, bucket_seconds: int) -> DataFrame:
     )
 
 
-def _tail_prefix(
-    b: DataFrame,
-    keys_l: list[str],
-    order_l: list[str],
-    payload_cols: list[str],
-    K: int,
-    descending: bool = False,
-) -> DataFrame:
-    """Per-(keys, __bucket) carry table with ``__prefix``: an array of up
-    to ``K`` structs — the K rows immediately *preceding* the bucket in
-    event order (immediately *following* when ``descending``), nearest
-    row last (``element_at(__prefix, -1)`` is the adjacent row).
-
-    Memory is bounded by K, never by bucket or key size: per-bucket tails
-    come from a row_number over the reversed order + filter (no
-    whole-bucket collect), and the cross-bucket stitch only flattens the
-    previous K non-empty buckets' ≤K-row tails (each non-empty bucket
-    contributes ≥1 row, so K buckets back always suffices)."""
-    rev = [
-        F.col(c).asc() if descending else F.col(c).desc() for c in order_l
-    ]
-    w_rev = Window.partitionBy(*keys_l, "__bucket").orderBy(*rev)
-    row_struct = F.struct(
-        *[F.col(c).alias(f"__o{i}") for i, c in enumerate(order_l)],
-        *[F.col(c).alias(f"__p_{c}") for c in payload_cols],
-    )
-    tail_rows = (
-        b.select(
-            *keys_l,
-            "__bucket",
-            row_struct.alias("__r"),
-            F.row_number().over(w_rev).alias("__rne"),
-        )
-        .where(F.col("__rne") <= K)
-        .drop("__rne")
-    )
-    sorted_tail = F.array_sort(F.collect_list("__r"))
-    if descending:
-        sorted_tail = F.reverse(sorted_tail)
-    tails = tail_rows.groupBy(*keys_l, "__bucket").agg(sorted_tail.alias("__tail"))
-    bucket_ord = F.col("__bucket").desc() if descending else F.col("__bucket").asc()
-    wc = (
-        Window.partitionBy(*keys_l)
-        .orderBy(bucket_ord)
-        .rowsBetween(-K, -1)
-    )
-    flat = F.flatten(F.collect_list("__tail").over(wc))
-    return tails.select(
-        *keys_l,
-        "__bucket",
-        F.slice(
-            flat, F.greatest(F.lit(1), F.size(flat) - F.lit(K) + 1), F.lit(K)
-        ).alias("__prefix"),
-    )
-
-
-def _bucketed_shift(
+def _carry_chain(
     df: DataFrame,
-    cols: list[str],
-    ks: list[int],
     keys_l: list[str],
     order_l: list[str],
     ts_col: str,
     bucket_seconds: int,
-    descending: bool,
-    name: str,
+    gap_seconds: int | None = None,
+    session_col: str = "session_id",
+    lag_cols: Sequence[str] = (),
+    lags: Sequence[int] = (),
+    rolling: Sequence[tuple[str, str, int]] = (),
+    include_current: bool = False,
+    ffill_cols: Sequence[str] = (),
+    ffill_suffix: str = "_ffill",
+    descending: bool = False,
 ) -> DataFrame:
-    """Bucketed lag (lead when ``descending``): in-bucket F.lag over the
-    per-(key, bucket) window; the first k rows of each bucket read the
-    carry prefix instead (``__prefix[rn - k - 1]``, negative = from the
-    end). No task ever scans a whole hot key."""
-    K = max(ks)
-    b = _bucketize(df, ts_col, bucket_seconds)
-    prefix = _tail_prefix(b, keys_l, order_l, cols, K, descending)
-    joined = b.join(prefix, [*keys_l, "__bucket"], "left")
-    ord_cols = [
-        F.col(c).desc() if descending else F.col(c).asc() for c in order_l
-    ]
-    wb = Window.partitionBy(*keys_l, "__bucket").orderBy(*ord_cols)
-    joined = joined.withColumn("__rn", F.row_number().over(wb))
-    for c in cols:
-        for k in ks:
-            in_bucket = F.lag(c, k).over(wb)
-            from_prefix = F.try_element_at(
-                F.col("__prefix"), F.col("__rn") - F.lit(k) - F.lit(1)
-            )[f"__p_{c}"]
-            joined = joined.withColumn(
-                f"{c}_{name}{k}",
-                F.when(F.col("__rn") > k, in_bucket).otherwise(from_prefix),
+    """Bucketed (skew-split) sessionize + lags + rows-mode rolling +
+    forward-fill in ONE in-bucket window pass and ONE carry join.
+
+    Every window runs per (key, bucket), so no task sees a whole hot
+    key.  The same windowed rows feed a per-(key, bucket) summary —
+    first/last ts, internal session-gap count, the last K rows (picked
+    by row_number against the bucket's row count, so memory is bounded
+    by K) and the last non-null fill value — and one small window over
+    buckets turns it into the carry: session offset, K-row prefix and
+    the fill value of strictly earlier buckets.  After the join every
+    output column is a row-wise fix-up.  Output columns follow the
+    chain order (session, lags, rolling, fills), identical to the
+    window strategy.  ``descending`` reverses event order, turning the
+    lags into leads (``{c}_lead{k}``; the prefix holds following rows).
+    """
+    part = [*keys_l, "__bucket"]
+    wb = Window.partitionBy(*part).orderBy(
+        *[F.col(c).desc() if descending else F.col(c) for c in order_l]
+    )
+    upto = wb.rowsBetween(Window.unboundedPreceding, 0)
+    upper = 0 if include_current else -1
+    K = max([*lags, *(k for _, _, k in rolling)], default=0)
+    payload = sorted({*(lag_cols if lags else ()), *(c for c, _, _ in rolling)})
+
+    win = {
+        "__rn": F.row_number().over(wb),
+        "__n": F.count(F.lit(1)).over(
+            wb.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ),
+    }
+    if gap_seconds is not None:
+        win["__prev_ts"] = F.lag(ts_col).over(wb)
+    win.update({f"__lag_{c}_{k}": F.lag(c, k).over(wb) for c in lag_cols for k in lags})
+    for col, agg, k in rolling:
+        fr = wb.rowsBetween(-k, upper)
+        win[f"__cnt_{col}_{k}"] = F.count(col).over(fr)
+        if agg in ("min", "max"):
+            win[f"__{agg}_{col}_{k}"] = _AGG[agg](col).over(fr)
+        elif agg in ("sum", "avg"):
+            cast_t = "long" if _is_integral(df, col) else "double"
+            win[f"__sum_{col}_{k}"] = F.sum(F.col(col).cast(cast_t)).over(fr)
+        elif agg == "stddev":
+            x = F.col(col).cast("double")
+            win[f"__s1_{col}_{k}"] = F.sum(x).over(fr)
+            win[f"__s2_{col}_{k}"] = F.sum(x * x).over(fr)
+        elif agg != "count":
+            raise ValueError(f"unsupported bucketed rolling agg {agg!r}")
+    win.update({f"__ff_{c}": F.last(c, ignorenulls=True).over(upto) for c in ffill_cols})
+    w = _bucketize(df, ts_col, bucket_seconds).select(
+        "*", *[e.alias(n) for n, e in win.items()]
+    )
+    if gap_seconds is not None:
+        is_gap = F.when(
+            epoch_seconds(ts_col) - epoch_seconds("__prev_ts") > F.lit(gap_seconds), 1
+        ).otherwise(0)
+        w = w.withColumn("__gaps", F.sum(is_gap).over(upto))
+
+    # per-(key, bucket) summary over the windowed rows (same partitioning)
+    rn = F.col("__rn")
+    summ = []
+    if gap_seconds is not None:
+        summ += [
+            F.min_by(ts_col, "__rn").alias("__first_ts"),
+            F.max_by(ts_col, "__rn").alias("__last_ts"),
+            F.max("__gaps").alias("__bucket_gaps"),
+        ]
+    if K:
+        tail_row = F.struct(rn, *[F.col(c).alias(f"__p_{c}") for c in payload])
+        summ.append(
+            F.array_sort(
+                F.collect_list(F.when(rn > F.col("__n") - K, tail_row))
+            ).alias("__tail")
+        )
+    summ += [F.max_by(f"__ff_{c}", "__rn").alias(f"__fl_{c}") for c in ffill_cols]
+    s = w.groupBy(*part).agg(*summ)
+
+    # carry: one window over each key's buckets
+    wc = Window.partitionBy(*keys_l).orderBy(
+        F.col("__bucket").desc() if descending else F.col("__bucket")
+    )
+    before = wc.rowsBetween(Window.unboundedPreceding, -1)
+    carry = {}
+    if gap_seconds is not None:
+        prev_last = F.lag("__last_ts").over(wc)
+        s = s.withColumn("__first_new", (
+            prev_last.isNull()
+            | (epoch_seconds("__first_ts") - epoch_seconds(prev_last) > F.lit(gap_seconds))
+        ).cast("long"))
+        # sessions started before this bucket + whether its first row starts one
+        carry["__offset"] = F.coalesce(
+            F.sum(F.col("__first_new") + F.col("__bucket_gaps")).over(before), F.lit(0)
+        ) + F.col("__first_new")
+    if K:
+        # each non-empty bucket holds >= 1 row, so K buckets back suffice
+        flat = F.flatten(F.collect_list("__tail").over(wc.rowsBetween(-K, -1)))
+        carry["__prefix"] = F.slice(
+            flat, F.greatest(F.lit(1), F.size(flat) - F.lit(K) + 1), F.lit(K)
+        )
+    carry.update({
+        f"__prev_{c}": F.last(f"__fl_{c}", ignorenulls=True).over(before)
+        for c in ffill_cols
+    })
+    j = w.join(
+        s.select(*part, *[e.alias(n) for n, e in carry.items()]), part, "left"
+    )
+
+    # row-wise fix-ups
+    out = []
+    if gap_seconds is not None:
+        out.append(
+            (F.col("__offset") + F.col("__gaps") - 1).cast("long").alias(session_col)
+        )
+    for c in lag_cols:
+        for k in lags:
+            from_prefix = F.try_element_at(F.col("__prefix"), rn - F.lit(k + 1))
+            out.append(
+                F.when(rn > k, F.col(f"__lag_{c}_{k}"))
+                .otherwise(from_prefix[f"__p_{c}"])
+                .alias(f"{c}_{'lead' if descending else 'lag'}{k}")
             )
-    return joined.drop("__bucket", "__prefix", "__rn")
+    for col, agg, k in rolling:
+        # the frame's rows before the bucket: the prefix's last k - rn + 1
+        m = F.lit(k + 1) - rn
+        sl = F.slice(
+            F.col("__prefix"),
+            F.greatest(F.lit(1), F.size("__prefix") - m + 1),
+            F.greatest(m, F.lit(0)),
+        )
+        nn = F.filter(F.transform(sl, _prefix_vals(col)), _notnull())
+        total_cnt = F.col(f"__cnt_{col}_{k}") + F.size(nn).cast("long")
+        if agg == "count":
+            e = total_cnt
+        elif agg == "min":
+            e = F.least(F.col(f"__min_{col}_{k}"), F.array_min(nn))
+        elif agg == "max":
+            e = F.greatest(F.col(f"__max_{col}_{k}"), F.array_max(nn))
+        elif agg == "stddev":
+            s1 = F.coalesce(F.col(f"__s1_{col}_{k}"), F.lit(0.0)) + F.aggregate(
+                nn, F.lit(0.0), _sum_merge("double")
+            )
+            s2 = F.coalesce(F.col(f"__s2_{col}_{k}"), F.lit(0.0)) + F.aggregate(
+                nn, F.lit(0.0), _sumsq_merge()
+            )
+            n_d = total_cnt.cast("double")
+            var = (s2 - s1 * s1 / n_d) / (n_d - F.lit(1.0))
+            e = F.when(total_cnt >= 2, F.sqrt(F.greatest(var, F.lit(0.0))))
+        else:
+            cast_t = "long" if _is_integral(df, col) else "double"
+            zero = F.lit(0).cast(cast_t)
+            total = F.coalesce(F.col(f"__sum_{col}_{k}"), zero) + F.aggregate(
+                nn, zero, _sum_merge(cast_t)
+            )
+            if agg == "avg":
+                total = total.cast("double") / total_cnt.cast("double")
+            e = F.when(total_cnt > 0, total)
+        out.append(e.alias(f"{col}_{agg}_last{k}"))
+    out += [
+        F.coalesce(F.col(f"__ff_{c}"), F.col(f"__prev_{c}")).alias(f"{c}{ffill_suffix}")
+        for c in ffill_cols
+    ]
+    return j.select(*df.columns, *out)
 
 
 def with_lags(
@@ -277,8 +320,9 @@ def with_lags(
     strategy="bucketed": the carry-in trick for hot keys — time is
     range-split into ``bucket_seconds`` buckets; each bucket shifts
     locally and its first k rows read a tiny per-(key, bucket) carry
-    prefix (the K=max(k) trailing rows of earlier buckets). Identical
-    output, task size bounded by bucket not key.
+    prefix (the K=max(k) trailing rows of earlier buckets; following
+    rows for leads). Identical output, task size bounded by bucket not
+    key.
     """
     keys_l = [keys] if isinstance(keys, str) else list(keys)
     order_l = [order] if isinstance(order, str) else list(order)
@@ -299,16 +343,12 @@ def with_lags(
         raise ValueError(f"unknown with_lags strategy {strategy!r}")
 
     out = df
-    if lags_l:
-        out = _bucketed_shift(
-            out, cols_l, lags_l, keys_l, order_l, ts_col, bucket_seconds,
-            descending=False, name="lag",
-        )
-    if leads_l:
-        out = _bucketed_shift(
-            out, cols_l, leads_l, keys_l, order_l, ts_col, bucket_seconds,
-            descending=True, name="lead",
-        )
+    for ks, desc in ((lags_l, False), (leads_l, True)):
+        if ks:
+            out = _carry_chain(
+                out, keys_l, order_l, ts_col, bucket_seconds,
+                lag_cols=cols_l, lags=ks, descending=desc,
+            )
     return out
 
 
@@ -367,10 +407,10 @@ def with_rolling(
     strategy="window": one shuffle on ``keys``; each key is one task.
     strategy="bucketed" bounds task size by bucket, not key:
 
-    - rows mode: per-(key, ``bucket_ts_col``-bucket) window aggregate,
-      combined on the first k rows of each bucket with an aggregate over
-      the tiny carry prefix (the trailing K=max(k) rows of earlier
-      buckets): sums/counts add, min/max take least/greatest, avg and
+    - rows mode (``_carry_chain``): per-(key, ``bucket_ts_col``-bucket)
+      window aggregate, combined on the first k rows of each bucket with
+      an aggregate over the tiny carry prefix (the trailing K=max(k)
+      rows of earlier buckets): sums/counts add, min/max take least/greatest, avg and
       stddev recombine from (count, sum, sum-of-squares). Exact for
       sum/count/min/max/avg; stddev recombination is algebraically exact
       but may differ from the window form in the last float ulps.
@@ -421,87 +461,10 @@ def with_rolling(
             u = u.withColumn(f"{col}_{agg}_{k}s", _AGG[agg](col).over(w))
         return u.where(~F.col("__ctx")).drop("__ts_long", "__bucket", "__ctx")
 
-    # rows mode: in-bucket window + carry-prefix recombination
-    K = max(k for _, _, k in specs_l)
-    payload = sorted({c for c, _, _ in specs_l})
-    b = _bucketize(out, bucket_ts_col, bucket_seconds)
-    prefix = _tail_prefix(b, keys_l, order_l, payload, K, descending=False)
-    j = b.join(prefix, [*keys_l, "__bucket"], "left")
-    wb = Window.partitionBy(*keys_l, "__bucket").orderBy(*order_l)
-    j = j.withColumn("__rn", F.row_number().over(wb))
-    drop_cols = ["__bucket", "__prefix", "__rn"]
-
-    # per-k slice of the prefix: the last m = k - rn + 1 rows (only
-    # meaningful when rn <= k; empty otherwise)
-    ks = sorted({k for _, _, k in specs_l})
-    for k in ks:
-        m = F.lit(k) - F.col("__rn") + F.lit(1)
-        sl = F.when(
-            m > 0,
-            F.slice(
-                F.col("__prefix"),
-                F.greatest(F.lit(1), F.size("__prefix") - m + 1),
-                F.greatest(m, F.lit(1)),
-            ),
-        ).otherwise(F.slice(F.col("__prefix"), 1, 0))
-        j = j.withColumn(f"__sl_{k}", sl)
-        drop_cols.append(f"__sl_{k}")
-
-    for col, agg, k in specs_l:
-        w = wb.rowsBetween(-k, upper)
-        nn = F.filter(
-            F.transform(F.col(f"__sl_{k}"), _prefix_vals(col)), _notnull()
-        )
-        pre_cnt = F.size(nn).cast("long")
-        in_cnt = F.count(col).over(w)
-        total_cnt = in_cnt + pre_cnt
-        name = f"{col}_{agg}_last{k}"
-        if agg == "count":
-            j = j.withColumn(name, total_cnt)
-            continue
-        if agg in ("min", "max"):
-            in_v = (F.min(col) if agg == "min" else F.max(col)).over(w)
-            pre_v = F.array_min(nn) if agg == "min" else F.array_max(nn)
-            j = j.withColumn(
-                name, F.least(in_v, pre_v) if agg == "min" else F.greatest(in_v, pre_v)
-            )
-            continue
-        cast_t = "long" if _is_integral(df, col) else "double"
-        zero = F.lit(0).cast(cast_t)
-        in_sum = F.sum(F.col(col).cast(cast_t)).over(w)
-        pre_sum = F.aggregate(nn, zero, _sum_merge(cast_t))
-        total_sum = F.coalesce(in_sum, zero) + pre_sum
-        if agg == "sum":
-            j = j.withColumn(
-                name, F.when(total_cnt > 0, total_sum).otherwise(F.lit(None))
-            )
-        elif agg == "avg":
-            j = j.withColumn(
-                name,
-                F.when(
-                    total_cnt > 0,
-                    total_sum.cast("double") / total_cnt.cast("double"),
-                ).otherwise(F.lit(None)),
-            )
-        elif agg == "stddev":
-            s1 = F.coalesce(
-                F.sum(F.col(col).cast("double")).over(w), F.lit(0.0)
-            ) + F.aggregate(nn, F.lit(0.0), _sum_merge("double"))
-            s2 = F.coalesce(
-                F.sum(F.col(col).cast("double") * F.col(col).cast("double")).over(w),
-                F.lit(0.0),
-            ) + F.aggregate(nn, F.lit(0.0), _sumsq_merge())
-            n_d = total_cnt.cast("double")
-            var = (s2 - s1 * s1 / n_d) / (n_d - F.lit(1.0))
-            j = j.withColumn(
-                name,
-                F.when(
-                    total_cnt >= 2, F.sqrt(F.greatest(var, F.lit(0.0)))
-                ).otherwise(F.lit(None)),
-            )
-        else:
-            raise ValueError(f"unsupported bucketed rolling agg {agg!r}")
-    return j.drop(*drop_cols)
+    return _carry_chain(
+        df, keys_l, order_l, bucket_ts_col, bucket_seconds,
+        rolling=specs_l, include_current=include_current,
+    )
 
 
 def forward_fill(
@@ -520,9 +483,9 @@ def forward_fill(
 
     strategy="window": one shuffle on ``keys``; each key is one task.
     strategy="bucketed": the sessionize-style carry trick for hot keys —
-    the fill runs per (key, ``ts_col``-bucket); a tiny per-(key, bucket)
-    carry table (last non-null value per bucket, forward-filled across
-    buckets over strictly earlier buckets) seeds rows whose bucket has no
+    the fill runs per (key, ``ts_col``-bucket); the carry table
+    (``_carry_chain``: last non-null value per bucket, forward-filled
+    over strictly earlier buckets) seeds rows whose bucket has no
     earlier non-null. Identical output, task size bounded by bucket.
     """
     keys_l = [keys] if isinstance(keys, str) else list(keys)
@@ -543,48 +506,10 @@ def forward_fill(
     if strategy != "bucketed":
         raise ValueError(f"unknown forward_fill strategy {strategy!r}")
 
-    b = _bucketize(df, ts_col, bucket_seconds)
-    wb = (
-        Window.partitionBy(*keys_l, "__bucket")
-        .orderBy(*order_l)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    return _carry_chain(
+        df, keys_l, order_l, ts_col, bucket_seconds,
+        ffill_cols=cols_l, ffill_suffix=suffix,
     )
-    # carry: last non-null value per (key, bucket) = max over (order, v)
-    # structs restricted to non-null v (lexicographic max = latest row)
-    carry = b.groupBy(*keys_l, "__bucket").agg(
-        *[
-            F.max(
-                F.when(
-                    F.col(c).isNotNull(),
-                    F.struct(
-                        *[F.col(o).alias(f"__o{i}") for i, o in enumerate(order_l)],
-                        F.col(c).alias("__v"),
-                    ),
-                )
-            )["__v"].alias(f"__c_{c}")
-            for c in cols_l
-        ]
-    )
-    wc = (
-        Window.partitionBy(*keys_l)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = carry.select(
-        *keys_l,
-        "__bucket",
-        *[
-            F.last(f"__c_{c}", ignorenulls=True).over(wc).alias(f"__prev_{c}")
-            for c in cols_l
-        ],
-    )
-    out = b.join(carry, [*keys_l, "__bucket"], "left")
-    for c in cols_l:
-        out = out.withColumn(
-            f"{c}{suffix}",
-            F.coalesce(F.last(c, ignorenulls=True).over(wb), F.col(f"__prev_{c}")),
-        )
-    return out.drop("__bucket", *[f"__prev_{c}" for c in cols_l])
 
 
 def _tag_union(

@@ -17,15 +17,18 @@ snapshot/manifest semantics over local parquet directly):
       bucket=<k>/...parquet        one self-contained unit of work
       _manifest/bucket-<k>.json    written AFTER the bucket commits:
                                    {bucket, rows, bytes, wall_sec,
-                                    input_fingerprint, finished_at}
+                                    input_fingerprint, n_buckets,
+                                    finished_at}
 
 A unit of work = one conv_id hash bucket: ``pmod(xxhash64(conv_id), B)``.
 Every window/feature in the job is keyed by conv_id, so a bucket is
 closed under the computation — materializing buckets independently is
 exactly equivalent to one global job, and a crashed run resumes by
-anti-joining the manifest (skip buckets whose manifest entry exists).
-The staging write is itself a commit point (_STAGED marker with the
-input fingerprint): a resumed run reuses the staged copy instead of
+anti-joining the manifest (skip buckets whose manifest entry has the
+same input fingerprint and n_buckets; ``read_result`` refuses a
+manifest that mixes fingerprints). The staging write is itself a
+commit point (_STAGED marker with the input fingerprint and
+n_buckets): a resumed run reuses the staged copy instead of
 re-scanning the source.
 
 Scale: B is the resume granularity, not the shuffle width — each bucket
@@ -68,20 +71,26 @@ class CheckpointedRun:
     def _manifest_path(self, bucket: int) -> str:
         return os.path.join(self.out_dir, MANIFEST_DIR, f"bucket-{bucket}.json")
 
-    def completed_buckets(self) -> set[int]:
-        done = set()
-        mdir = os.path.join(self.out_dir, MANIFEST_DIR)
-        for name in os.listdir(mdir):
-            if name.startswith("bucket-") and name.endswith(".json"):
-                done.add(int(name[len("bucket-"):-len(".json")]))
-        return done
-
     def manifest(self) -> list[dict]:
+        """Committed entries of buckets 0..n_buckets-1 written under this
+        n_buckets (an entry from another bucket count covers other rows)."""
         out = []
-        for b in sorted(self.completed_buckets()):
-            with open(self._manifest_path(b)) as f:
-                out.append(json.load(f))
+        for b in range(self.n_buckets):
+            if os.path.exists(self._manifest_path(b)):
+                with open(self._manifest_path(b)) as f:
+                    entry = json.load(f)
+                if entry.get("n_buckets") == self.n_buckets:
+                    out.append(entry)
         return out
+
+    def completed_buckets(self, input_fingerprint: str | None = None) -> set[int]:
+        """Buckets with a manifest entry — for ``input_fingerprint`` only,
+        when given."""
+        return {
+            e["bucket"]
+            for e in self.manifest()
+            if input_fingerprint is None or e["input_fingerprint"] == input_fingerprint
+        }
 
     # ------------------------------------------------------------ run
     def run(
@@ -91,8 +100,9 @@ class CheckpointedRun:
         input_fingerprint: str = "",
     ) -> dict:
         """Materialize ``transform(source)`` bucket-by-bucket, skipping
-        buckets already present in the manifest. Returns run totals."""
-        done = self.completed_buckets()
+        buckets whose manifest entry has this ``input_fingerprint``.
+        Returns run totals."""
+        done = self.completed_buckets(input_fingerprint)
         todo = [b for b in range(self.n_buckets) if b not in done]
         totals = {"rows": 0, "bytes": 0, "buckets_run": 0, "buckets_skipped": len(done)}
         if not todo:
@@ -123,6 +133,7 @@ class CheckpointedRun:
                 "bytes": nbytes,
                 "wall_sec": round(time.time() - t0, 3),
                 "input_fingerprint": input_fingerprint,
+                "n_buckets": self.n_buckets,
                 "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
             # write-then-rename: the manifest entry is the commit point
@@ -143,14 +154,16 @@ class CheckpointedRun:
         The _STAGED marker makes staging resumable too."""
         staged = os.path.join(self.out_dir, "_staged")
         marker = os.path.join(staged, "_STAGED.json")
+        want = {"input_fingerprint": input_fingerprint, "n_buckets": self.n_buckets}
         reuse = False
         # only reuse when a NON-EMPTY fingerprint matches: the default
         # "" must not equal a previous run's "" — a changed source with
         # no declared fingerprint would silently materialize from the
-        # stale staged copy
+        # stale staged copy. __bucket depends on n_buckets, so it must
+        # match too.
         if input_fingerprint and os.path.exists(marker):
             with open(marker) as f:
-                reuse = json.load(f).get("input_fingerprint") == input_fingerprint
+                reuse = json.load(f) == want
         if not reuse:
             (
                 source.withColumn(
@@ -162,16 +175,22 @@ class CheckpointedRun:
             )
             tmp = marker + ".tmp"
             with open(tmp, "w") as f:
-                json.dump({"input_fingerprint": input_fingerprint}, f)
+                json.dump(want, f)
             os.replace(tmp, marker)
         return self.spark.read.parquet(staged)
 
     def read_result(self) -> DataFrame:
-        done = sorted(self.completed_buckets())
-        if not done:
+        entries = self.manifest()
+        if not entries:
             raise ValueError(
                 f"no completed buckets under {self.out_dir} — nothing to read"
             )
+        fps = sorted({e["input_fingerprint"] for e in entries})
+        if len(fps) > 1:
+            raise ValueError(
+                f"buckets under {self.out_dir} come from different inputs "
+                f"(input fingerprints {fps}) — finish a run over one input first"
+            )
         return self.spark.read.parquet(
-            *[os.path.join(self.out_dir, f"bucket={b}") for b in done]
+            *[os.path.join(self.out_dir, f"bucket={e['bucket']}") for e in entries]
         )

@@ -14,7 +14,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.temporal import forward_fill, sessionize, with_lags, with_rolling
+from ..operators.temporal import (
+    _carry_chain, forward_fill, sessionize, with_lags, with_rolling,
+)
 
 ORDER = ("ts", "turn_idx")
 
@@ -53,11 +55,14 @@ def materialize_features(
     strategy="window" (default): every step shares one partitioning, so
     Catalyst plans a single Exchange+Sort with chained window operators
     — the optimal plan when no conversation is hot.
-    strategy="bucketed": every step uses its carry-in skew-split form
-    (task size bounded by ``bucket_seconds`` regardless of key size) —
-    the right plan when a single conversation holds a large share of all
-    turns (BENCH/SKEW.md: 2-3x faster end to end on a 99%-hot-key input,
-    and the only form that survives an arbitrarily hot key).
+    strategy="bucketed": the skew-split plan for a conversation that
+    holds a large share of all turns — task size is bounded by
+    ``bucket_seconds`` regardless of key size, so it is the only form
+    that survives an arbitrarily hot key.  The whole chain is one
+    ``temporal._carry_chain`` call: one in-bucket window pass, one
+    per-(conv_id, bucket) carry table and one join back (4 exchanges
+    incl. the carry's broadcast).  Same rows, schema and column order
+    as the window plan.
 
     Shuffle-byte layout: Tungsten's UnsafeRow gives every fixed-width
     field a full 8-byte slot, so each column kept out of the pre-window
@@ -70,11 +75,6 @@ def materialize_features(
     bytes/row; on the bandwidth-capped 16-core host this is the lever
     that scales, not more partitions)."""
     kw = dict(keys="conv_id", order=ORDER)
-    bkw = (
-        dict(strategy="bucketed", bucket_seconds=bucket_seconds)
-        if strategy == "bucketed"
-        else {}
-    )
     n_tokens = (
         F.length("text")
         - F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
@@ -103,34 +103,39 @@ def materialize_features(
         .drop("text", "role")
     )
     base_cols = [c for c in pre.columns if c != "__role_code"]
-    # the first window (sessionize's cumulative session ids) triggers
-    # the single conv_id Exchange; everything added after it is
-    # computed post-shuffle
-    out = sessionize(pre, gap_seconds=gap_seconds, **kw, **bkw)
-    out = (
-        out.withColumn("is_user", (F.col("__role_code") == 0).cast("int"))
-        .withColumn("is_assistant", (F.col("__role_code") == 1).cast("int"))
-        .withColumn("is_tool", (F.col("__role_code") == 2).cast("int"))
-        .withColumn("has_tool", F.col("tool").isNotNull().cast("int"))
-    )
-    out = with_lags(out, ["text_len", "n_tokens"], lags=[1, 2], **kw, **bkw)
-    out = with_rolling(
-        out,
-        [
-            ("text_len", "sum", 5),
-            ("text_len", "avg", 5),
-            ("n_tokens", "sum", 5),
-            ("is_tool", "sum", 10),
-            ("is_user", "sum", 10),
-        ],
-        **kw,
-        **bkw,
-    )
-    out = forward_fill(out, ["tool"], **kw, **bkw)
+    flags = {
+        "is_user": (F.col("__role_code") == 0).cast("int"),
+        "is_assistant": (F.col("__role_code") == 1).cast("int"),
+        "is_tool": (F.col("__role_code") == 2).cast("int"),
+        "has_tool": F.col("tool").isNotNull().cast("int"),
+    }
+    lag_cols, lags = ["text_len", "n_tokens"], [1, 2]
+    rolling = [
+        ("text_len", "sum", 5),
+        ("text_len", "avg", 5),
+        ("n_tokens", "sum", 5),
+        ("is_tool", "sum", 10),
+        ("is_user", "sum", 10),
+    ]
+    if strategy == "bucketed":
+        out = _carry_chain(
+            pre.withColumns(flags), ["conv_id"], list(ORDER), "ts",
+            bucket_seconds, gap_seconds=gap_seconds, lag_cols=lag_cols,
+            lags=lags, rolling=rolling, ffill_cols=["tool"],
+        )
+    else:
+        # the first window (sessionize's cumulative session ids) triggers
+        # the single conv_id Exchange; everything added after it is
+        # computed post-shuffle
+        out = sessionize(
+            pre, gap_seconds=gap_seconds, strategy=strategy, **kw
+        ).withColumns(flags)
+        out = with_lags(out, lag_cols, lags=lags, **kw)
+        out = with_rolling(out, rolling, **kw)
+        out = forward_fill(out, ["tool"], **kw)
     # restore the canonical column order (turn features before
     # session/lag/rolling outputs — the r4 schema, byte-for-byte)
-    flags = ["is_user", "is_assistant", "is_tool", "has_tool"]
-    head = base_cols + flags
+    head = base_cols + list(flags)
     tail = [c for c in out.columns if c not in set(head) and c != "__role_code"]
     return out.select(*head, *tail)
 

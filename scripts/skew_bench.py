@@ -2,8 +2,10 @@
 hot-key regime the north rule's salted-key splitting targets).
 
 Compares wall time of the as-of join window strategy (whole hot key in
-one task) vs the bucketed skew-splitting strategy, and sessionize
-window vs bucketed (carry trick). Appends results to BENCH/SKEW.md.
+one task) vs the bucketed skew-splitting strategy, each temporal
+operator window vs bucketed (carry trick), and the full
+``materialize_features`` chain window vs bucketed (one carry table, one
+join). Writes the results to BENCH/SKEW.md.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ from didtool_spark.operators.temporal import (
     with_lags,
     with_rolling,
 )
+from didtool_spark.plans.materialize import materialize_features
 from didtool_spark.session import get_spark
 
 
@@ -90,6 +93,11 @@ def main() -> None:
             tr, ["tool"], strategy=strategy, bucket_seconds=BW
         ).write.format("noop").mode("overwrite").save()
 
+    def run_materialize(strategy):
+        materialize_features(
+            tr, strategy=strategy, bucket_seconds=BW
+        ).write.format("noop").mode("overwrite").save()
+
     runners = {
         "asof": run_asof,
         "sessionize": run_sess,
@@ -97,6 +105,7 @@ def main() -> None:
         "rolling_rows": run_roll_rows,
         "rolling_time": run_roll_time,
         "ffill": run_ffill,
+        "materialize": run_materialize,
     }
     # warm both plans once
     for fn in runners.values():
@@ -126,11 +135,13 @@ Input: {n:,} turns, hottest conversation holds {hot['count']:,}
 | rolling rows (sum+avg last5) | {results['rolling_rows_window']} | {results['rolling_rows_bucketed']} |
 | rolling time (sum 1800s) | {results['rolling_time_window']} | {results['rolling_time_bucketed']} |
 | forward fill | {results['ffill_window']} | {results['ffill_bucketed']} |
+| materialize_features (full chain; bucketed = one carry join) | {results['materialize_window']} | {results['materialize_bucketed']} |
 
 All bucketed forms are proven output-identical to the window forms
-(tests/test_temporal.py). At 10^12 turns a hot conversation makes the
-window strategy's single task unbounded; the bucketed strategies bound
-every task by the time-bucket width regardless of key size.
+(tests/test_temporal.py, tests/test_strategy_fuzz.py). At 10^12 turns a
+hot conversation makes the window strategy's single task unbounded; the
+bucketed strategies bound every task by the time-bucket width
+regardless of key size.
 """
         )
 

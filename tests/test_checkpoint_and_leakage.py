@@ -160,3 +160,57 @@ def test_checkpoint_staged_scan_prunes(spark, tr, tmp_path_factory):
     # changed input fingerprint -> restaged
     run._stage_source(tr, "fp-2")
     assert os.path.getmtime(marker) != mtime
+
+
+def _ident(df):
+    return df
+
+
+def test_checkpoint_resume_with_new_input_reruns(spark, tmp_path_factory):
+    """A manifest entry counts as done only for the input fingerprint
+    that wrote it: a run over a new input in the same directory must
+    re-run every bucket, not return the old input's rows."""
+    out = str(tmp_path_factory.mktemp("ckpt_fp"))
+    a = generate_transcripts(spark, n_convs=20, avg_turns=6, seed=1)
+    b = generate_transcripts(spark, n_convs=30, avg_turns=6, seed=2)
+    CheckpointedRun(spark, out, n_buckets=2).run(a, _ident, input_fingerprint="A")
+
+    run = CheckpointedRun(spark, out, n_buckets=2)
+    totals = run.run(b, _ident, input_fingerprint="B")
+    assert totals["buckets_run"] == 2 and totals["buckets_skipped"] == 0
+    assert totals["rows"] == b.count()
+    assert run.read_result().count() == b.count()
+
+    # a run over input A that dies after one bucket leaves a manifest
+    # mixing A and B: read_result refuses it instead of stitching both
+    calls = []
+
+    def dies_after_one(df):
+        calls.append(1)
+        if len(calls) > 1:
+            raise RuntimeError("crash")
+        return df
+
+    with pytest.raises(RuntimeError):
+        run.run(a, dies_after_one, input_fingerprint="A")
+    with pytest.raises(ValueError, match="fingerprint"):
+        run.read_result()
+
+
+def test_checkpoint_n_buckets_change_reruns(spark, tr, tmp_path_factory):
+    """__bucket is computed with n_buckets: a staged copy or a manifest
+    entry written under another bucket count must not be reused, even
+    with the same input fingerprint."""
+    n = tr.count()
+    out = str(tmp_path_factory.mktemp("ckpt_nb"))
+    CheckpointedRun(spark, out, n_buckets=4)._stage_source(tr, "fp")
+    run = CheckpointedRun(spark, out, n_buckets=2)
+    assert run.run(tr, _ident, input_fingerprint="fp")["rows"] == n
+
+    out = str(tmp_path_factory.mktemp("ckpt_nb_manifest"))
+    CheckpointedRun(spark, out, n_buckets=4).run(tr, _ident, input_fingerprint="fp")
+    run = CheckpointedRun(spark, out, n_buckets=2)
+    totals = run.run(tr, _ident, input_fingerprint="fp")
+    assert totals["buckets_run"] == 2 and totals["buckets_skipped"] == 0
+    assert totals["rows"] == n
+    assert run.read_result().count() == n

@@ -38,6 +38,24 @@ def test_materialize_single_exchange(spark, tmp_path_factory):
     assert n_sorts == 1, f"expected 1 sort, got {n_sorts}"
 
 
+def test_bucketed_materialize_one_carry_join(spark, tmp_path_factory):
+    """The bucketed (skew-split) feature chain builds ONE carry table
+    and joins it back ONCE: one (conv_id, bucket) exchange for the
+    windowed rows, one for the summary's input, one for the window over
+    buckets, plus the carry's broadcast — a carry table per operator
+    fails here."""
+    import re
+
+    path = str(tmp_path_factory.mktemp("matb") / "t")
+    generate_transcripts(spark, n_convs=10, avg_turns=5).write.parquet(path)
+    feats = materialize_features(spark.read.parquet(path), strategy="bucketed")
+    p = plan_str(feats)
+    n_exchanges = len(re.findall(r"\(\d+\) (?:Broadcast)?Exchange", p))
+    n_joins = len(re.findall(r"\(\d+\) \w*Join", p))
+    assert n_exchanges == 4, f"expected 4 exchanges, got {n_exchanges}\n{p[:3000]}"
+    assert n_joins == 1, f"expected 1 join, got {n_joins}\n{p[:3000]}"
+
+
 def test_scan_pushdown(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("scan") / "t")
     generate_transcripts(spark, n_convs=20, avg_turns=5).write.parquet(path)

@@ -17,7 +17,7 @@ import datetime
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from didtool_spark.operators.labels import (
@@ -60,14 +60,15 @@ FUZZ = settings(
 
 
 @st.composite
-def transcripts(draw):
-    """Rows (conv_id, turn_idx, role, text, tool, ts, value): 1-3
-    ragged conversations, gaps in [0, 3600]s (ties included), nullable
-    everything except the key/order columns."""
+def transcripts(draw, min_convs=1, max_turns=8):
+    """Rows (conv_id, turn_idx, role, text, tool, ts, value):
+    ``min_convs``-3 ragged conversations of 1-``max_turns`` turns, gaps
+    in [0, 3600]s (ties included), nullable everything except the
+    key/order columns."""
     rows = []
-    n_convs = draw(st.integers(1, 3))
+    n_convs = draw(st.integers(min_convs, 3))
     for ci in range(n_convs):
-        n_turns = draw(st.integers(1, 8))
+        n_turns = draw(st.integers(1, max_turns))
         gaps = draw(
             st.lists(
                 st.sampled_from([0, 1, 30, 600, 1799, 1800, 1801, 3600]),
@@ -154,6 +155,25 @@ def test_temporal_bucketed_equals_window_fuzz(spark, rows):
                      bucket_seconds=1800),
         ["conv_id", "turn_idx"],
     )
+
+
+@FUZZ
+@given(rows=transcripts(min_convs=0, max_turns=24))
+@example(rows=[])
+@example(rows=[("c0", 0, None, None, None, BASE, None)])
+def test_materialize_bucketed_equals_window_fuzz(spark, rows):
+    """The fused bucketed feature chain (one carry table, one join) vs
+    the window plan: up to 24 turns per conversation against 30-minute
+    buckets, so the K=10 rolling prefix spans several short (often
+    single-row) buckets, on NULL tools/roles/text, duplicate-second
+    ties, an empty frame and a single row."""
+    from didtool_spark.plans.materialize import materialize_features
+
+    df = spark.createDataFrame(rows, SCHEMA)
+    w = materialize_features(df)
+    b = materialize_features(df, strategy="bucketed", bucket_seconds=1800)
+    assert b.dtypes == w.dtypes
+    _cmp(w, b, ["conv_id", "turn_idx"])
 
 
 @FUZZ
